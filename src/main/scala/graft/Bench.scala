@@ -15,6 +15,31 @@ import graft.kpi.Kpis
   * tables.
   */
 object Bench {
+
+  /** Telemetry one bench row accumulates over its reps (one side of an
+    * interleaved pair): GC and task time add up, the task-memory peak is
+    * the max over reps, and steal adds up until any /proc/stat snapshot
+    * reads -1 (unreadable), which marks the whole row -1.
+    */
+  private[graft] final case class RowStats(gcMs: Long = 0L, taskMs: Long = 0L,
+      peakBytes: Long = 0L, stealJiffies: Long = 0L) {
+    def plusRep(gc: Long, task: Long, peak: Long, steal0: Long,
+        steal1: Long): RowStats =
+      RowStats(gcMs + gc, taskMs + task, peakBytes max peak,
+        if (stealJiffies < 0 || steal0 < 0 || steal1 < 0) -1L
+        else stealJiffies + steal1 - steal0)
+
+    /** The row's `jvm` artifact value. USER_HZ is fixed at 100 by the
+      * /proc ABI; ROOT locale keeps the decimal point a '.'.
+      */
+    def render(uptimeS: Long, storeMb: Long): String = {
+      def d1(x: Double) = "%.1f".formatLocal(java.util.Locale.ROOT, x)
+      val stealS = if (stealJiffies < 0) -1.0 else stealJiffies / 100.0
+      s"gc_ms=$gcMs uptime_s=$uptimeS task_s=${d1(taskMs / 1000.0)} " +
+        s"peak_mb=${peakBytes >> 20} store_mb=$storeMb steal_s=${d1(stealS)}"
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
@@ -88,9 +113,8 @@ object Bench {
     // telemetry could not separate. /proc/stat's steal counter (jiffies a
     // vCPU was runnable but the host ran another tenant) is the direct
     // measurement: steal_s high across unrelated rows = host contention,
-    // not code. USER_HZ is fixed at 100 for the /proc ABI. Returns -1
-    // where unreadable (non-Linux), rendering steal_s=-0.0… never 0-vs-
-    // missing ambiguity.
+    // not code. Returns -1 where unreadable (non-Linux), which renders the
+    // row's steal_s=-1.0 — never 0-vs-missing ambiguity.
     def stealJiffies(): Long =
       try {
         val src = scala.io.Source.fromFile("/proc/stat")
@@ -115,16 +139,6 @@ object Bench {
     def storeMb(): Long =
       spark.sparkContext.getRDDStorageInfo
         .map(i => i.memSize + i.diskSize).sum >> 20
-    def recordHealth(name: String, gc0: Long, task0: Long,
-        steal0: Long = -1L): Unit = {
-      val up = java.lang.management.ManagementFactory.getRuntimeMXBean.getUptime / 1000
-      val taskS = (taskMsTotal.get() - task0) / 1000.0
-      val stealS = // USER_HZ = 100 (fixed /proc ABI)
-        if (steal0 < 0) -1.0 else (stealJiffies() - steal0) / 100.0
-      jvmHealth(name) = s"gc_ms=${gcMillis() - gc0} uptime_s=$up " +
-        f"task_s=$taskS%.1f peak_mb=${peakTaskMem.get() >> 20} " +
-        s"store_mb=${storeMb()} steal_s=$stealS%.1f"
-    }
     def fingerprint(name: String, df: => org.apache.spark.sql.DataFrame): Unit =
       try {
         val p = df.queryExecution.executedPlan.toString
@@ -141,12 +155,17 @@ object Bench {
       // rep 1 performs the physical tombstone fold; later reps find a
       // clean store and no-op — the min is a floor, not a measurement
       "bm25_update_compact")
-    def time(name: String)(f: => Unit): Unit = {
-      val gc0 = gcMillis()
-      val task0 = taskMsTotal.get()
-      val steal0 = stealJiffies()
-      peakTaskMem.set(0L)
-      val runs = (1 to reps).map { _ =>
+    // the ONE measurement scope every row uses (time, once and each side
+    // of interleaved): each rep snapshots the gc/task/steal counters
+    // around its timed region and reads its own task-memory peak, so an
+    // interleaved pair never shares or double-counts a side's telemetry
+    final class Row(name: String) {
+      private var stats = RowStats()
+      def rep(f: => Unit): Double = {
+        val gc0 = gcMillis()
+        val task0 = taskMsTotal.get()
+        val steal0 = stealJiffies()
+        peakTaskMem.set(0L)
         val t0 = System.nanoTime()
         try {
           f
@@ -157,6 +176,8 @@ object Bench {
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           -1.0
         } finally {
+          stats = stats.plusRep(gcMillis() - gc0, taskMsTotal.get() - task0,
+            peakTaskMem.get(), steal0, stealJiffies())
           // barrier-block hygiene BETWEEN reps, outside the timed region:
           // the rep's action has fully materialized, its frames are
           // discarded, so its localCheckpoint blocks are dead weight —
@@ -165,77 +186,39 @@ object Bench {
           Checkpoint.releaseAll()
         }
       }
-      times(name) = if (runs.contains(-1.0)) -1.0 else runs.min
-      recordHealth(name, gc0, task0, steal0)
+      def record(): Unit = jvmHealth(name) = stats.render(
+        java.lang.management.ManagementFactory.getRuntimeMXBean.getUptime / 1000,
+        storeMb())
+    }
+    def minOr(xs: Seq[Double]): Double =
+      if (xs.contains(-1.0)) -1.0 else xs.min
+    def time(name: String, n: Int = reps)(f: => Unit): Unit = {
+      val row = new Row(name)
+      val runs = (1 to n).map(_ => row.rep(f))
+      times(name) = minOr(runs)
+      row.record()
       // first rep of the ETL phase is the COLD number BASELINE.md compares
       // against (later reps are JVM/page-cache warm); for the index
       // compaction only rep 1 performs the physical fold (later reps find
       // no affected partitions — a no-op floor), so its rep-1 is the
       // number of record. Keep both visible. `_cold` keys are excluded
       // from the headline total.
-      if (ColdNames(name) && reps > 1) times(name + "_cold") = runs.head
+      if (ColdNames(name) && n > 1) times(name + "_cold") = runs.head
     }
     // ONE-rep timing for end-to-end pipeline runs (funnel, scale phase):
     // these are lifecycle measurements, not query noise floors
-    def once(name: String)(f: => Unit): Unit = {
-      val gc0 = gcMillis()
-      val task0 = taskMsTotal.get()
-      val steal0 = stealJiffies()
-      peakTaskMem.set(0L)
-      val t0 = System.nanoTime()
-      try { f; times(name) = (System.nanoTime() - t0) / 1e9 }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        times(name) = -1.0
-      }
-      finally Checkpoint.releaseAll() // between-rows hygiene (see time)
-      recordHealth(name, gc0, task0, steal0)
-    }
+    def once(name: String)(f: => Unit): Unit = time(name, 1)(f)
     // INTERLEAVED A/B reps (a, b, a, b, …) inside one phase, so slow
     // machine-load drift hits both sides alike and the recorded DIRECTION
-    // is load-invariant; each side still reports its min across reps
+    // is load-invariant; each side reports its min across reps and its
+    // own telemetry
     def interleaved(aName: String, bName: String)(a: => Unit)(b: => Unit): Unit = {
-      // GC accumulated PER SIDE (snapshot around each rep): the shared
-      // artifact gc_ms field must not double-count the pair's combined
-      // delta on both rows, or it can't adjudicate which side paid
-      var gcA = 0L
-      var gcB = 0L
-      var tkA = 0L
-      var tkB = 0L
-      var stA = 0L
-      var stB = 0L
-      peakTaskMem.set(0L) // shared across the pair: both rows report the pair's max
-      def oneRep(f: => Unit, addGc: Long => Unit, addTk: Long => Unit,
-          addSt: Long => Unit): Double = {
-        val g0 = gcMillis()
-        val k0 = taskMsTotal.get()
-        val s0 = stealJiffies()
-        val t0 = System.nanoTime()
-        try { f; (System.nanoTime() - t0) / 1e9 }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] interleaved rep failed: ${e.getMessage}")
-          -1.0
-        }
-        finally {
-          addGc(gcMillis() - g0)
-          addTk(taskMsTotal.get() - k0)
-          addSt(stealJiffies() - s0) // 0 when unreadable (-1 minus -1)
-          Checkpoint.releaseAll() // between-reps hygiene (see time)
-        }
-      }
-      val runs = (1 to reps).map(_ =>
-        (oneRep(a, gcA += _, tkA += _, stA += _),
-          oneRep(b, gcB += _, tkB += _, stB += _)))
-      def minOr(xs: Seq[Double]): Double =
-        if (xs.contains(-1.0)) -1.0 else xs.min
+      val (rowA, rowB) = (new Row(aName), new Row(bName))
+      val runs = (1 to reps).map(_ => (rowA.rep(a), rowB.rep(b)))
       times(aName) = minOr(runs.map(_._1))
       times(bName) = minOr(runs.map(_._2))
-      // baseline = current − side's accumulated delta, the same snapshot
-      // trick as gc/task; an unreadable counter (−1, stX 0) renders −1.0
-      recordHealth(aName, gcMillis() - gcA, taskMsTotal.get() - tkA,
-        stealJiffies() - stA)
-      recordHealth(bName, gcMillis() - gcB, taskMsTotal.get() - tkB,
-        stealJiffies() - stB)
+      rowA.record()
+      rowB.record()
     }
 
     val dw = s"/tmp/graft_bench_dw_${System.nanoTime()}"
@@ -459,11 +442,7 @@ object Bench {
     locally {
       val zdir = s"/tmp/graft_bench_zipf_${System.nanoTime()}"
       once("bm25_zipf_stage") {
-        // SPARK_GRAFT_ZIPF_DOCS scales the staging for one-off
-        // crossover measurement (the per-round default keeps the row
-        // inside the bench budget; see BENCH.md §WAND crossover)
-        val (n0, l, v) = graft.text.RetrievalOps.ZipfBench
-        val n = sys.env.getOrElse("SPARK_GRAFT_ZIPF_DOCS", n0.toString).toInt
+        val (n, l, v) = graft.text.RetrievalOps.ZipfBench
         // r21: token-form staging (identical index bytes, no
         // string-build + regex-split round trip) and the query set
         // derived from the just-written termmeta (term, df) sidecar
@@ -487,9 +466,9 @@ object Bench {
       // heavy-form policy (r18 verdict #6): the EXHAUSTIVE side of the
       // expensive-scorer pair is gate-only — it exists purely as the
       // pruning crossover's baseline (~36 s/rep), and that crossover is
-      // measured on record by `graft.text.ZipfCrossover` + the BENCH.md
-      // table; the correctness gate (q_bm25_zipf_expensive) still runs
-      // it per round. Only the shipped WAND form stays benched.
+      // on record in the BENCH.md table; the correctness gate
+      // (q_bm25_zipf_expensive) still runs it per round. Only the shipped
+      // WAND form stays benched.
       time("q_bm25_zipf_expensive_wand_served") {
         graft.text.RetrievalOps.bm25ZipfExpensiveWandServed(spark, zdir)
           .count(): Unit
@@ -728,11 +707,10 @@ object Bench {
     rmTree(incrPqIdx)
 
     // Phase 4 — bucketed storage as the measured fact-build default (the
-    // 100 TB posture StorageDemo only demonstrated): header and detail are
-    // bucketed+sorted by the order key ONCE (the amortized write), after
-    // which every fact build's header⨝detail join plans with ZERO
-    // Exchanges — a bucket-co-located sort-merge join instead of shuffling
-    // the two largest tables. Broadcast is disabled for both timed builds
+    // 100 TB posture): header and detail are bucketed+sorted by the order
+    // key ONCE (the amortized write), after which every fact build's
+    // header⨝detail join plans with ZERO Exchanges — a bucket-co-located
+    // sort-merge join instead of shuffling the two largest tables. Broadcast is disabled for both timed builds
     // so the measured delta is exactly the removed shuffle (at 100 TB
     // neither side of header⨝detail fits a broadcast anyway; the bounded
     // dim lookups keep their explicit broadcast() hints, which override
@@ -824,11 +802,11 @@ object Bench {
     }
 
     // Phase 6 — the 10× scale point RECORDED AS AN ARTIFACT (sf0.1 fact
-    // replicated 10× with offset order keys ≈ sf1, dims unchanged — the
-    // ScaleProbe construction, now in the driver bench so the sub-linear
-    // scaling story is a per-round number, not a probe narrative), and
-    // the bucketed-vs-shuffled direction decided at a fact size where the
-    // removed header⨝detail shuffle is material (6M lines, not 600k).
+    // replicated 10× with offset order keys ≈ sf1, dims unchanged — here
+    // so the sub-linear scaling story is a per-round number, not a probe
+    // narrative), and the bucketed-vs-shuffled
+    // direction decided at a fact size where the removed header⨝detail
+    // shuffle is material (6M lines, not 600k).
     locally {
       import org.apache.spark.sql.functions.col
       val sf1Dir = s"/tmp/graft_bench_sf1_${System.nanoTime()}"

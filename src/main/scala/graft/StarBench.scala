@@ -5,9 +5,8 @@ import graft.etl.Star
 import graft.kpi.Kpis
 
 /** The star build + KPI suite shared by [[Bench]] (per-round artifact)
-  * and [[ScaleRemeasure]] (the idle 10×-scale re-measure). Factored out
-  * so the re-measure prices the IDENTICAL code path the round artifact
-  * prices — a divergent copy would make the two numbers incomparable.
+  * and the awbench harness. Factored out so both price the IDENTICAL
+  * code path — a divergent copy would make the numbers incomparable.
   */
 object StarBench {
 
@@ -88,8 +87,8 @@ object StarBench {
   }
 
   /** Stage the 10× corpus: sf0.1's fact tables replicated 10× with
-    * offset order keys (≈ sf1), dims copied unchanged — the ScaleProbe
-    * construction used by Bench phase 6 and the idle re-measure.
+    * offset order keys (≈ sf1), dims copied unchanged — the construction
+    * used by Bench phase 6 and the awbench warehouse workload.
     */
   def stage10x(spark: SparkSession, sfDir: String, sf1Dir: String): Unit = {
     import org.apache.spark.sql.functions.col

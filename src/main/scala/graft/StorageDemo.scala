@@ -3,110 +3,16 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Storage-layout demonstrations for the 100 TB posture:
+/** Storage-layout demonstrations for the 100 TB posture, each returning
+  * its observed evidence (tested in ZOrderSpec):
   *
-  *  1. BUCKETED header⨝detail: both sides bucketed+sorted by the order key
-  *     → the join plans with NO Exchange on either side (shuffle-free
-  *     sort-merge join). At 100 TB this turns the one big shuffle of the
-  *     fact build into a metadata-only co-location.
-  *  2. PARTITIONED fact: year-partitioned parquet → a year predicate shows
-  *     up as PartitionFilters and prunes the scan.
-  *
-  * Prints the physical plans + observed evidence.
-  * Usage: runMain graft.StorageDemo [sfDir]
+  *  1. small-file COMPACTION: a fragmented year-partitioned table is
+  *     rewritten to one file per partition, rows bit-identical.
+  *  2. Z-ORDER layout: one Morton-clustered layout whose parquet footers
+  *     prune on EITHER of two predicates, where a time-sorted layout
+  *     prunes only time.
   */
 object StorageDemo {
-  def main(args: Array[String]): Unit = {
-    val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val wh = s"/tmp/graft_warehouse_${System.nanoTime()}"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ to show bucketing
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    // --- 1. bucketed co-located join ---------------------------------
-    Tables.orders(spark, dir).write.mode("overwrite")
-      .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-      .saveAsTable("orders_b")
-    Tables.lineitem(spark, dir).write.mode("overwrite")
-      .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-      .saveAsTable("lineitem_b")
-    val joined = spark.table("orders_b")
-      .join(spark.table("lineitem_b"),
-        col("o_orderkey") === col("l_orderkey"))
-    val plan = joined.queryExecution.executedPlan.toString
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
-    println(s"bucketed join: $exchanges shuffle Exchange(s) in the plan " +
-      s"(unbucketed would need 2); rows=${joined.count()}")
-
-    // --- 2. partition-pruned fact scan --------------------------------
-    val fato = etl.Star.fatoVendas(spark, dir)
-      .withColumn("ano", (col("sk_tempo") / 10000).cast("int"))
-    fato.write.mode("overwrite").partitionBy("ano").parquet(s"$wh/fato")
-    val mat = spark.read.parquet(s"$wh/fato")
-    val pruned = mat.filter(col("ano") === 1996)
-    val planStr = pruned.queryExecution.executedPlan.toString
-    val pf = planStr.indexOf("PartitionFilters")
-    val scanLine = if (pf >= 0) planStr.substring(pf).takeWhile(_ != ']') + "]"
-                   else "(no PartitionFilters found)"
-    println(s"partition pruning: $scanLine")
-    println(s"  full=${mat.count()} rows, ano=1996 -> ${pruned.count()} rows")
-
-    // --- 3. Z-ORDER layout: one layout serving BOTH predicates --------
-    // A time-sorted layout prunes time predicates perfectly and user
-    // predicates not at all (every file spans every user). Range-
-    // partitioning + sorting on the Morton code of (user, time) gives
-    // every file a tight min/max BOX in both dimensions, so the parquet
-    // footers prune on EITHER predicate — the multi-dimensional layout
-    // trade every lakehouse z-order feature makes. Evidence: the scan's
-    // materialized row count (post row-group/page pruning) per
-    // (layout × query).
-    // --- 3b. small-file compaction (the lakehouse OPTIMIZE pass) ------
-    // Incremental/streaming ingest fragments partitioned tables; the
-    // maintenance rewrite repartitions each partition's rows into one
-    // task so every partition directory lands as ONE file, rows
-    // bit-identical. At 100 TB this is the scheduled compaction job that
-    // keeps scan task counts (and parquet footer overhead) bounded.
-    val (files0, files1, identical) = compactDemo(spark, fato, s"$wh/cmp")
-    println(s"compaction: $files0 fragment files -> $files1 " +
-      s"(1/partition), rows identical: $identical")
-
-    val z = zorderSkipDemo(spark, dir, s"$wh/ev", 64)
-    println(s"z-order skipping over ${z.total} rows, 64 files/layout:")
-    println(f"  time-slice query: ts-sorted reads ${z.tsTime}%7d rows, z-ordered ${z.zTime}%7d")
-    println(f"  user-slice query: ts-sorted reads ${z.tsUser}%7d rows, z-ordered ${z.zUser}%7d " +
-      f"(${z.tsUser.toDouble / math.max(z.zUser, 1L)}%.1fx less I/O on the layout's second dimension)")
-
-    // --- 4. bucketed reference store: one-sided-shuffle anti-join -----
-    // The novelty reference store is the big REUSABLE side of every
-    // re-crawl scoring pass. Bucketing it by the shingle hash parks it
-    // pre-shuffled on disk, so the anti-join shuffles ONLY the new
-    // crawl's doc side — at 100 TB that halves the shuffle of the
-    // hottest recurring join in the curation pipeline.
-    import graft.text.CurationOps
-    Tables.documents(spark, dir)
-      .filter(s"source IN (${CurationOps.noveltyRefIn})")
-      .selectExpr(s"${CurationOps.hashedShinglesExpr} AS shd")
-      .select(explode(col("shd")).as("h")).distinct()
-      .write.mode("overwrite").bucketBy(8, "h").saveAsTable("novelty_ref_b")
-    val docSide = Tables.documents(spark, dir)
-      .selectExpr("CAST(doc_id AS BIGINT) AS doc_id",
-        s"${CurationOps.hashedShinglesExpr} AS shd")
-      .select(col("doc_id"), explode(col("shd")).as("h"))
-    val anti = docSide.join(spark.table("novelty_ref_b"), Seq("h"), "left_anti")
-    val antiPlan = anti.queryExecution.executedPlan.toString
-    val antiEx = "Exchange hashpartitioning".r.findAllIn(antiPlan).length
-    println(s"bucketed novelty store: $antiEx shuffle Exchange(s) in the " +
-      s"anti-join plan (unbucketed needs 2); novel hash rows=${anti.count()}")
-    spark.stop()
-  }
-
   /** Fragment `df` (year-partitioned, many small files), compact to one
     * file per partition, and verify the rewrite is lossless. Returns
     * (fragment file count, compacted file count, rows identical).
@@ -143,7 +49,7 @@ object StorageDemo {
     * runs a time-slice query and a user-slice query against both and
     * returns each scan's materialized row count (after parquet footer
     * pruning — files are row-group-sized here, the 100 TB behavior
-    * scaled down). Shared by the demo main and ZOrderSpec.
+    * scaled down).
     */
   def zorderSkipDemo(spark: SparkSession, dir: String, out: String,
       files: Int): ZSkip = {

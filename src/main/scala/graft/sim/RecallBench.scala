@@ -214,7 +214,7 @@ object RecallBench {
     // — if the 0.975 ceiling were a greedy-local-minimum artifact, a
     // restart from the far side of centroid space would break it; if it
     // holds at E=2..4 (with the extra cellevals priced beside it), the
-    // ceiling is corpus truth, as XcellDiag diagnosed.
+    // ceiling is corpus truth (SCALE_VERIFY_r18.md).
     for ((e, p, b, h) <- Seq((2, 2, 2, 2), (2, 2, 4, 2), (4, 2, 4, 2))) {
       val (ranked, visited, routeCells) =
         EmbeddingOps.graphRoutedFrontierPoint(spark, sfDir, p, b, h, e)

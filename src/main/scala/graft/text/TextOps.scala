@@ -1124,8 +1124,8 @@ FROM bucketed ORDER BY doc_id"""
     *     exact integers-ratio as the full inverted-index form (the DuckDB
     *     oracle, which still builds the full index, must agree bit-exact).
     */
-  def jaccardPairs(s: SparkSession, d: String, threshold: Double = 0.5,
-      blockBuckets: Boolean = true): DataFrame = {
+  def jaccardPairs(s: SparkSession, d: String,
+      threshold: Double = 0.5): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     // barrier: feeds the index build AND the verification join (an eager
@@ -1154,12 +1154,8 @@ FROM bucketed ORDER BY doc_id"""
     val b = idx.toDF("doc_b", "lang", "bucket", "s")
     // the (size/20) bucket block is the GATE's definition (mirrored by
     // its oracle) and drops cross-bucket pairs whose sizes straddle a
-    // boundary; blockBuckets=false keeps the prefix filter (which alone
-    // guarantees no >=t pair is lost) for callers needing EXACT truth
-    // over all same-lang pairs (DedupBench's recall denominator)
-    val joinKeys = if (blockBuckets) Seq("s", "lang", "bucket")
-      else Seq("s", "lang")
-    val cands = a.join(b, joinKeys)
+    // boundary
+    val cands = a.join(b, Seq("s", "lang", "bucket"))
       .filter(col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b").distinct()
     val fa = base.select(col("doc_id").as("doc_a"),
@@ -1285,12 +1281,8 @@ FROM bucketed ORDER BY doc_id"""
     * boundary can never drop a true pair.
     */
   private[graft] def tfidfCosineCandidates(s: SparkSession, d: String,
-      threshold: Double): DataFrame =
-    tfidfCosineCandidatesOf(s, documents(s, d), threshold)
-
-  private[graft] def tfidfCosineCandidatesOf(s: SparkSession,
-      docs: DataFrame, threshold: Double): DataFrame = {
-    val weights = tfidfCosineWeightsOf(docs)
+      threshold: Double): DataFrame = {
+    val weights = tfidfCosineWeightsOf(documents(s, d))
     tfidfCosineCandidatesFrom(s, weights, tfidfNorms(weights), threshold)
   }
 

@@ -8,12 +8,99 @@ import graft.etl.aw.{AwEtl, AwSchemas}
   * (row counts from the reference's run logs, BASELINE.md) and on
   * FIXTURES.md edge-case fixtures where the snapshot lacks the inputs
   * (Person Person, SalesOrderHeader/Detail).
+  *
+  * Every real-CSV test has a synthetic twin over small CSVs written with
+  * the reference headers (FIXTURES.md): the twin always runs the same
+  * checks at the fixture's counts, and the real-CSV test CANCELS (never
+  * passes) when the extract is absent.
   */
 class AwEtlSpec extends SparkSpec {
   import spark.implicits._
 
-  private def rd(name: String, s: org.apache.spark.sql.types.StructType) =
-    AwEtl.readCsv(spark, s"$awData/$name.csv", s)
+  /** A CSV source and the counts its checks expect. */
+  private case class Src(dir: String, products: Long, noSubcat: Long,
+      addresses: Long, sellers: Long)
+
+  private def realSrc: Src = {
+    assume(new java.io.File(awData).isDirectory,
+      s"reference CSV extract absent at $awData — real row counts unchecked")
+    Src(awData, products = 504, noSubcat = 209, addresses = 19614, sellers = 17)
+  }
+
+  /** Writes `rows` under the schema's field names (the reference CSV
+    * headers): strings double-quoted, absent columns empty (= null); a
+    * Some("") is the quoted empty string pandas also reads as null.
+    */
+  private def writeCsv(dir: java.nio.file.Path, name: String,
+      schema: org.apache.spark.sql.types.StructType,
+      rows: Seq[Map[String, Any]]): Unit = {
+    val lines = rows.map(r => schema.fieldNames.map(c => r.get(c) match {
+      case Some(v: String) => "\"" + v.replace("\"", "\"\"") + "\""
+      case Some(v) => v.toString
+      case None => ""
+    }).mkString(","))
+    java.nio.file.Files.write(dir.resolve(s"$name.csv"),
+      (schema.fieldNames.mkString(",") +: lines).mkString("\n")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  }
+
+  private lazy val fixture: Src = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_aw_fixture")
+    writeCsv(dir, "Production Product", AwSchemas.product, Seq(
+      Map("ProductID" -> 1, "Name" -> "HL Road Frame - Black, 58",
+        "Color" -> "Black", "ProductSubcategoryID" -> 14),
+      Map("ProductID" -> 2, "Name" -> "Sport-100 Helmet, Red",
+        "Color" -> "Red", "ProductSubcategoryID" -> 31),
+      Map("ProductID" -> 3, "Name" -> "Adjustable Race", "Color" -> ""),
+      Map("ProductID" -> 4, "Name" -> "Bearing Ball"),
+      Map("ProductID" -> 5, "Name" -> "Mountain-100 Silver, 38",
+        "Color" -> "Silver", "ProductSubcategoryID" -> 1)))
+    writeCsv(dir, "Production ProductSubcategory", AwSchemas.productSubcategory,
+      Seq((1, 1, "Mountain Bikes"), (14, 2, "Road Frames"), (31, 4, "Helmets"))
+        .map { case (id, cat, n) => Map("ProductSubcategoryID" -> id,
+          "ProductCategoryID" -> cat, "Name" -> n) })
+    writeCsv(dir, "Production ProductCategory", AwSchemas.productCategory,
+      Seq((1, "Bikes"), (2, "Components"), (3, "Clothing"), (4, "Accessories"))
+        .map { case (id, n) => Map("ProductCategoryID" -> id, "Name" -> n) })
+    writeCsv(dir, "Person Address", AwSchemas.address,
+      Seq((1, "Bothell", 79), (2, "Ottawa", 57), (3, "Paris", 179),
+        (4, "Seattle", 79), (5, "Toronto", 57))
+        .map { case (id, city, st) => Map("AddressID" -> id,
+          "AddressLine1" -> s"$id Main St.", "City" -> city,
+          "StateProvinceID" -> st) })
+    writeCsv(dir, "Person StateProvince", AwSchemas.stateProvince,
+      Seq((79, "WA", "US", "Washington"), (57, "ON", "CA", "Ontario"),
+        (179, "75", "FR", "Seine (Paris)"))
+        .map { case (id, code, cc, n) => Map("StateProvinceID" -> id,
+          "StateProvinceCode" -> code, "CountryRegionCode" -> cc, "Name" -> n) })
+    writeCsv(dir, "Person CountryRegion", AwSchemas.countryRegion,
+      Seq(("US", "United States"), ("CA", "Canada"), ("FR", "France"))
+        .map { case (cc, n) => Map("CountryRegionCode" -> cc, "Name" -> n) })
+    // customers 1..20: every third one a store customer (null PersonID)
+    writeCsv(dir, "Sales Customer", AwSchemas.customer, (1 to 20).map { id =>
+      val who = if (id % 3 == 0) Map("StoreID" -> (900 + id))
+        else Map("PersonID" -> (if (id == 1) 10963 else 20000 + id))
+      Map("CustomerID" -> id, "AccountNumber" -> f"AW$id%08d") ++ who
+    })
+    writeCsv(dir, "Sales SalesPerson", AwSchemas.salesPerson,
+      Seq(274, 275, 276, 277).map(id => Map("BusinessEntityID" -> id)))
+    writeCsv(dir, "HumanResources Employee", AwSchemas.employee,
+      Seq((274, "North American Sales Manager"), (275, "Sales Representative"),
+        (276, "Sales Representative"), (277, "Sales Representative"))
+        .map { case (id, t) => Map("BusinessEntityID" -> id, "JobTitle" -> t) })
+    Src(dir.toString, products = 5, noSubcat = 2, addresses = 5, sellers = 4)
+  }
+
+  /** The same checks over the real extract and over the fixture. */
+  private def twin(realName: String, fixtureName: String)(
+      check: Src => Unit): Unit = {
+    test(realName)(check(realSrc))
+    test(fixtureName)(check(fixture))
+  }
+
+  private def rd(src: Src, name: String,
+      s: org.apache.spark.sql.types.StructType) =
+    AwEtl.readCsv(spark, s"${src.dir}/$name.csv", s)
 
   // Synthetic Person rows (snapshot is missing Person Person.csv)
   private lazy val person = Seq(
@@ -30,29 +117,41 @@ class AwEtlSpec extends SparkSpec {
       lit(null).cast("string").as("rowguid"),
       lit(null).cast("string").as("ModifiedDate"))
 
-  test("dim_produto: 504 rows from real CSVs, null repair applied") {
-    val dim = AwEtl.dimProduto(
-      rd("Production Product", AwSchemas.product),
-      rd("Production ProductSubcategory", AwSchemas.productSubcategory),
-      rd("Production ProductCategory", AwSchemas.productCategory))
-    assert(dim.count() === 504)
-    // 209 products have no subcategory (FIXTURES.md) → repaired label
-    assert(dim.filter($"nome_subcategoria" === "Sem Subcategoria").count() === 209)
-    assert(dim.filter($"nome_categoria" === "Sem Categoria").count() === 209)
+  private def dimProduto(src: Src) = AwEtl.dimProduto(
+    rd(src, "Production Product", AwSchemas.product),
+    rd(src, "Production ProductSubcategory", AwSchemas.productSubcategory),
+    rd(src, "Production ProductCategory", AwSchemas.productCategory))
+
+  private def dimLocalidade(src: Src) = AwEtl.dimLocalidade(
+    rd(src, "Person Address", AwSchemas.address),
+    rd(src, "Person StateProvince", AwSchemas.stateProvince),
+    rd(src, "Person CountryRegion", AwSchemas.countryRegion))
+
+  private def dimVendedor(src: Src) = AwEtl.dimVendedor(
+    rd(src, "Sales SalesPerson", AwSchemas.salesPerson),
+    rd(src, "HumanResources Employee", AwSchemas.employee),
+    person)
+
+  twin("dim_produto: 504 rows from real CSVs, null repair applied",
+      "dim_produto: fixture CSVs, null repair applied") { src =>
+    val dim = dimProduto(src)
+    assert(dim.count() === src.products)
+    // products without a subcategory (209 in the extract, FIXTURES.md)
+    // → repaired label
+    assert(dim.filter($"nome_subcategoria" === "Sem Subcategoria").count() === src.noSubcat)
+    assert(dim.filter($"nome_categoria" === "Sem Categoria").count() === src.noSubcat)
     assert(dim.filter($"cor".isNull).count() === 0)
     // SKs contiguous from 1
     val Row(mn: Int, mx: Int, n: Long) = dim
       .agg(min("sk_produto"), max("sk_produto"), countDistinct("sk_produto"))
       .head
-    assert((mn, mx, n) === ((1, 504, 504L)))
+    assert((mn.toLong, mx.toLong, n) === ((1L, src.products, src.products)))
   }
 
-  test("dim_localidade: 19,614 rows, two-level geo join") {
-    val dim = AwEtl.dimLocalidade(
-      rd("Person Address", AwSchemas.address),
-      rd("Person StateProvince", AwSchemas.stateProvince),
-      rd("Person CountryRegion", AwSchemas.countryRegion))
-    assert(dim.count() === 19614)
+  twin("dim_localidade: 19,614 rows, two-level geo join",
+      "dim_localidade: fixture CSVs, two-level geo join") { src =>
+    val dim = dimLocalidade(src)
+    assert(dim.count() === src.addresses)
     assert(dim.filter($"pais" === "Não Informado").count() === 0)
     assert(dim.select("pais").distinct().count() > 1)
   }
@@ -83,10 +182,11 @@ class AwEtlSpec extends SparkSpec {
     assert(rows(2).getAs[String]("tipo_cliente") === "Individual")
   }
 
-  test("dim_cliente second load MERGES via the SCD2 kernel instead of truncate-reloading") {
-    // first load: the real 19,820-row Sales Customer.csv (person fixture
-    // for the names), opened as the initial version table
-    val dim = AwEtl.dimCliente(rd("Sales Customer", AwSchemas.customer), person)
+  twin("dim_cliente second load MERGES via the SCD2 kernel instead of truncate-reloading",
+      "dim_cliente second load MERGES via the SCD2 kernel (fixture CSVs)") { src =>
+    // first load: Sales Customer.csv (19,820 rows in the extract; person
+    // fixture for the names), opened as the initial version table
+    val dim = AwEtl.dimCliente(rd(src, "Sales Customer", AwSchemas.customer), person)
     val cur = AwEtl.dimClienteVersions(dim)
     val n = cur.count()
     // second load: a source change re-types every 7th customer and one
@@ -121,21 +221,13 @@ class AwEtlSpec extends SparkSpec {
       nv(0).getAs[java.sql.Date]("valid_from").toString === "2013-06-01")
   }
 
-  test("generic AW dim SCD2: a second load of produto/localidade/vendedor merges instead of truncating") {
+  twin("generic AW dim SCD2: a second load of produto/localidade/vendedor merges instead of truncating",
+      "generic AW dim SCD2: produto/localidade/vendedor second load merges (fixture CSVs)") { src =>
     import graft.etl.aw.AwEtl.dimScd2Surface
     val dims: Seq[(String, org.apache.spark.sql.DataFrame)] = Seq(
-      "dim_produto" -> AwEtl.dimProduto(
-        rd("Production Product", AwSchemas.product),
-        rd("Production ProductSubcategory", AwSchemas.productSubcategory),
-        rd("Production ProductCategory", AwSchemas.productCategory)),
-      "dim_localidade" -> AwEtl.dimLocalidade(
-        rd("Person Address", AwSchemas.address),
-        rd("Person StateProvince", AwSchemas.stateProvince),
-        rd("Person CountryRegion", AwSchemas.countryRegion)),
-      "dim_vendedor" -> AwEtl.dimVendedor(
-        rd("Sales SalesPerson", AwSchemas.salesPerson),
-        rd("HumanResources Employee", AwSchemas.employee),
-        person))
+      "dim_produto" -> dimProduto(src),
+      "dim_localidade" -> dimLocalidade(src),
+      "dim_vendedor" -> dimVendedor(src))
     dims.foreach { case (name, dim) =>
       val (key, attrs) = dimScd2Surface(name)
       val cur = AwEtl.dimVersions(name, dim)
@@ -169,19 +261,17 @@ class AwEtlSpec extends SparkSpec {
     }
   }
 
-  test("dim_vendedor: 17 rows from real CSVs; empty middle name collapses") {
-    val dim = AwEtl.dimVendedor(
-      rd("Sales SalesPerson", AwSchemas.salesPerson),
-      rd("HumanResources Employee", AwSchemas.employee),
-      person)
-    assert(dim.count() === 17)
+  twin("dim_vendedor: 17 rows from real CSVs; empty middle name collapses",
+      "dim_vendedor: fixture CSVs; empty middle name collapses") { src =>
+    val dim = dimVendedor(src)
+    assert(dim.count() === src.sellers)
     val byId = dim.collect().map(r =>
       r.getAs[Int]("id_vendedor_original") -> r.getAs[String]("nome_vendedor")).toMap
     assert(byId(274) === "Stephen Y Jiang")
     assert(byId(275) === "Michael Blythe") // null middle → single space
     // salespeople not in the synthetic person table: name empty after trim
     assert(byId(276) === "")
-    assert(dim.filter($"cargo".isNotNull).count() === 17) // employee join hit
+    assert(dim.filter($"cargo".isNotNull).count() === src.sellers) // employee join hit
   }
 
   test("fato_vendas: joins, metrics, null-key prune (FIXTURES edge cases)") {

@@ -7,6 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * dependency) and must produce the reference topology — five parallel
   * dimension tasks fanning into etl_fato_vendas, each task a spark-submit
   * of `AwRun --table <name>` (reference README.md:113 ordering contract).
+  * The docs' other launch instructions (`runMain` / `tools/run.sh`) must
+  * name mains that exist, so a deleted main cannot leave them dead.
   */
 class DagSpec extends AnyFunSuite {
   test("graft_aw_dag.py loads and has the 5-dims-then-fato topology") {
@@ -18,5 +20,20 @@ class DagSpec extends AnyFunSuite {
       new java.io.File(sys.props.getOrElse("user.dir", "."))).!(logger)
     assert(code === 0, s"check_dag.py failed:\n$out")
     assert(out.toString.contains("dag ok"), out.toString)
+  }
+
+  test("every main README.md and BENCH.md tell the reader to run exists") {
+    val root = new java.io.File(sys.props.getOrElse("user.dir", "."))
+    val launch = """(?:runMain|tools/run\.sh)\s+(graft(?:\.\w+)+)""".r
+    val named = Seq("README.md", "BENCH.md").flatMap { f =>
+      val txt = java.nio.file.Files.readString(new java.io.File(root, f).toPath)
+      launch.findAllMatchIn(txt).map(m => f -> m.group(1))
+    }.distinct
+    assert(named.map(_._2).contains("graft.Verify"), "the pattern matched nothing")
+    val dead = named.filterNot { case (_, cls) =>
+      scala.util.Try(Class.forName(cls).getMethod("main", classOf[Array[String]]))
+        .toOption.exists(m => java.lang.reflect.Modifier.isStatic(m.getModifiers))
+    }
+    assert(dead.isEmpty, s"documented mains that do not load: $dead")
   }
 }

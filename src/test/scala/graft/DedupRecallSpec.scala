@@ -8,9 +8,9 @@ import graft.text.TextOps
   * not bench prose — the dedup twin of IvfRecallSpec's argument.
   *
   * The driver corpus's true near-dup pairs all sit at Jaccard ≥ 0.8
-  * (DedupBench measures 1.0 recall there, theory ≥ 0.99), which never
-  * exercises the curve where it bends. This spec constructs pairs with
-  * CONTROLLED shingle Jaccard — a shared token prefix P plus per-side
+  * (BENCH.md's r15 measurement reads 1.0 recall there, theory ≥ 0.99),
+  * which never exercises the curve where it bends. This spec constructs
+  * pairs with CONTROLLED shingle Jaccard — a shared token prefix P plus per-side
   * unique suffixes of length q gives exactly (|P|−2)/(|P|+2q−2) shared
   * 3-shingles — and asserts the measured band-collision rate tracks
   * the classic 1−(1−J²)⁴ within sampling noise at every level. A

@@ -311,6 +311,31 @@ class GraphAnnSpec extends SparkSpec {
     }
   }
 
+  test("partitionPairPredicate prunes statically to exactly the selected (cell, batch) partitions") {
+    // a store shaped like the graph index's vectors table: (cell, batch)
+    // partitions, two rows each; k = 11 selected pairs is past the
+    // optimizer's In → InSet fold, the form maintenance plans with
+    val dir = s"/tmp/graft_pairpred_spec_${System.nanoTime()}"
+    val (cells, batches) = (4, 8)
+    spark.range(cells * batches * 2L)
+      .select(col("id").as("vec_id"), (col("id") % cells).cast("int").as("cell"),
+        ((col("id") / cells) % batches).cast("long").as("batch"))
+      .write.partitionBy("cell", "batch").parquet(dir)
+    val pairs = (0 until cells * batches by 3)
+      .map(i => (i % cells, (i / cells).toLong))
+    val df = spark.read.parquet(dir)
+      .filter(EmbeddingOps.partitionPairPredicate(pairs))
+    val got = df.collect()
+      .map(r => (r.getAs[Number]("cell").intValue, r.getAs[Number]("batch").longValue))
+    assert(got.toSet === pairs.toSet && got.length === 2 * pairs.size)
+    val scans = allNodes(df.queryExecution.executedPlan)
+      .collect { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
+    assert(scans.size === 1 && scans.head.partitionFilters.nonEmpty,
+      "the pair predicate must reach the scan as PartitionFilters")
+    assert(scans.head.metrics("numPartitions").value === pairs.size,
+      "the scan must read exactly the selected partitions")
+  }
+
   /** 16 clusters on a circle, one k-means seed (vec_id 0..15) per
     * cluster center, so Lloyd converges to one stable cell per cluster
     * and the centroid layer is a RING (adjacency reach ≤ 2 cells) —
